@@ -2668,7 +2668,7 @@ object SparkEntry {
     //      sums, distinct key-hash) catches a dropped, duplicated, or
     //      corrupted row ----
     "q_zorder_roundtrip" -> ((s, d) =>
-      s.read.parquet(zorderFixture(s, d))
+      Tables.readParquet(s, zorderFixture(s, d))
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")

@@ -1,15 +1,27 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata tables (TESTDATA.md).
   *
-  * One parquet file per table. At 100 TB each of these would be a
-  * partitioned parquet/iceberg-style directory; `spark.read.parquet`
-  * handles both transparently (glob/dir reads union files natively —
-  * replaces the reference's per-file read+concat loop,
-  * kafka_producer.py:273–282).
+  * Each table is a parquet path: a single file (as in TESTDATA.md) or a
+  * directory of part files, which at scale is a partitioned
+  * parquet/iceberg-style directory. `spark.read.parquet` handles both
+  * transparently (glob/dir reads union files natively — replaces the
+  * reference's per-file read+concat loop, kafka_producer.py:273–282).
+  *
+  * Every table read supplies its schema ([[parquetSchema]]), so
+  * building a frame launches no footer-reading Spark job. Only that
+  * metadata is cached, never results: one entry per qualified path,
+  * valid while the path's leaf files (name, length, mtime) and the
+  * session confs that change what parquet inference returns are
+  * unchanged. Nothing is keyed on which dataset a path holds.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -17,7 +29,60 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` under the path's resolved schema. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The session confs that change what parquet schema inference
+    * returns for the same files.
+    */
+  private val inferenceConfs = Seq(
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_BINARY_AS_STRING,
+    SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.CASE_SENSITIVE)
+
+  /** Leaf files (name, length, mtime) plus the inference confs. */
+  private final case class SchemaKey(
+      files: Seq[(String, Long, Long)], confs: Seq[Boolean])
+
+  private val schemaCache =
+    new ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per
+    * [[SchemaKey]]: a rewritten table or a flipped inference conf
+    * replaces the path's entry. Inference runs outside any map lock; two
+    * racing misses both infer the same schema. A path that does not
+    * list (missing, or a glob) is never cached — Spark's own read
+    * reports it, e.g. PATH_NOT_FOUND.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val leaves =
+      try {
+        val it = fs.listFiles(hp, true)
+        val b = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(b.result().sorted)
+      } catch { case _: FileNotFoundException => None }
+    leaves.fold(spark.read.parquet(path).schema) { files =>
+      val qualified = fs.makeQualified(hp).toString
+      val key = SchemaKey(files,
+        inferenceConfs.map(e => spark.sessionState.conf.getConf(e)))
+      val hit = schemaCache.get(qualified)
+      if (hit != null && hit._1 == key) hit._2
+      else {
+        val schema = spark.read.parquet(path).schema
+        schemaCache.put(qualified, (key, schema))
+        schema
+      }
+    }
+  }
 
   /** S1/S8 — CSV scan with an EXPLICIT schema (the engine never uses
     * `inferSchema`, which costs an extra full pass per file —

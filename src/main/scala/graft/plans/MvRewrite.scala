@@ -4,13 +4,15 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
+
+import graft.Tables
 
 /** Materialized-view rewrite: a Catalyst optimizer rule that answers
   * `fact.groupBy(keys).agg(count/sum/min/max(value))` from a
@@ -109,7 +111,8 @@ object MvRewrite {
     val missing = (keys ++ Seq("n", "sum_v", "min_v", "max_v"))
       .filterNot(c => stateRel.output.exists(_.name == c))
     require(missing.isEmpty, s"state at $statePath lacks columns $missing")
-    val valueType = spark.read.parquet(factPath).schema
+    val fact = Tables.readParquet(spark, factPath)
+    val valueType = fact.schema
       .find(_.name == value)
       .getOrElse(throw new IllegalArgumentException(
         s"value column $value not in fact table at $factPath"))
@@ -126,7 +129,7 @@ object MvRewrite {
         "acceptTwoDecimalRounding = true only if every value is a " +
         "whole number of hundredths")
     registry.put(normalize(factPath),
-      MvDef(scanPaths(spark, factPath), keys, value, stateRel))
+      MvDef(scanPaths(fact, factPath), keys, value, stateRel))
     install(spark)
   }
 
@@ -143,12 +146,12 @@ object MvRewrite {
 
   private def normalize(p: String): String = p.stripSuffix("/")
 
-  /** Resolve the root paths Spark will report for a scan of `path`, by
-    * planning a read of it — path comparison then never depends on
-    * scheme/qualification details.
+  /** Resolve the root paths Spark will report for a scan of `path`,
+    * from the planned read `df` of it — path comparison then never
+    * depends on scheme/qualification details.
     */
-  private def scanPaths(spark: SparkSession, path: String): Set[String] =
-    spark.read.parquet(path).queryExecution.analyzed match {
+  private def scanPaths(df: DataFrame, path: String): Set[String] =
+    df.queryExecution.analyzed match {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         fs.location.rootPaths.map(_.toString).toSet
       case _ => Set(normalize(path))

@@ -208,9 +208,10 @@ class TableStore(root: String, keepVersions: Int = 2) {
           // partition-scoped read of an unpartitioned table: no hive
           // partition can match — empty, never silently the full table
           case None if partValues.isDefined => emptyDf(spark, schema)
-          case None =>
-            val df = spark.read.parquet(versionDir(name, v).toString)
-            df.select(schema.fieldNames.map(df.col).toIndexedSeq: _*)
+          // the caller's schema on both layouts: no footer-reading job
+          // (Tables.parquetSchema's path cache would miss here, since a
+          // reader usually opens a version that was just written)
+          case None => spark.read.schema(schema).parquet(versionDir(name, v).toString)
           case Some(m) =>
             val wanted = partValues.map(_.map(partitionDirName(m.partCol, _)).toSet)
             val live = m.entries.filter { case (d, _) => wanted.forall(_.contains(d)) }

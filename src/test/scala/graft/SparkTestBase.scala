@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftCoreShims
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +22,26 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Run `body` and return the call site of every Spark job it started
+    * (a job's result stage is named after its call site, e.g.
+    * `parquet at Tables.scala:41`).
+    */
+  def jobCallSites(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(
+          if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
+    }
+    GraftCoreShims.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftCoreShims.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    sites.asScala.toSeq
+  }
 
   /** Shared golden-fixture compare for deterministic no-oracle queries
     * with mixed-type output (BpeSpec, QualityModelSpec; the numeric
