@@ -853,8 +853,9 @@ object SparkEntry {
 
     // ---- streaming ingest semantics as a batch replay (EP3):
     //      add/edit/remove events applied to a current table via
-    //      Ingest.applyEvents — edit-on-missing-key is a no-op
-    //      (kafka_consumer.py:153–155), removes anti-join out ----
+    //      Ingest.applyEvents — one key-partitioned replay over
+    //      current ∪ events; edit-on-missing-key is a no-op
+    //      (kafka_consumer.py:153–155), a winning remove drops the key ----
     "q_ingest_replay" -> ((s, d) => {
       val orders = t("orders")(s, d).select("o_orderkey", "o_custkey", "o_totalprice")
       val current = orders.filter(pmod(col("o_orderkey"), lit(7)) =!= 0)

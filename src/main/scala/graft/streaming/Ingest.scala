@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-
-import graft.ops.PosOps
 
 /** Streaming ingest: the reference's 9-topic Kafka→CSV materialization
   * (EP3, `secondDataPipeline/kafka_consumer/kafka_consumer.py:379–409`)
@@ -92,9 +90,31 @@ object Ingest {
         element_at(split(col("topic"), "_"), -1).as("kind"),
         col("seq"),
         from_json(col("value"), schema).as("row"))
-      .filter(schema.fieldNames
-        .map(f => col(s"row.$f").isNotNull).reduce(_ || _))
+      .filter(parsedPayload(col("row"), schema))
       .select(col("kind"), col("seq"), col("row.*"))
+
+  /** A `from_json` result that is not a corrupt payload: at least one
+    * field parsed non-null.
+    */
+  private def parsedPayload(row: Column, schema: StructType): Column =
+    schema.fieldNames.map(f => row.getField(f).isNotNull).reduce(_ || _)
+
+  /** Events per entity in a raw batch — the rows [[parseEntity]] would
+    * keep for each (topics, schema) pair — counted in ONE job: 0/1 hit
+    * columns summed by an RDD fold. (A global `agg` plans an exchange,
+    * which adaptive execution runs as separate stage jobs.)
+    */
+  private def entityCounts(
+      raw: DataFrame, entities: Seq[(Seq[String], StructType)]): Seq[Long] = {
+    val n = entities.size
+    val hits = raw.select(entities.map { case (topics, schema) =>
+      when(col("topic").isin(topics: _*) &&
+        parsedPayload(from_json(col("value"), schema), schema), 1L)
+        .otherwise(0L)
+    }: _*)
+    hits.rdd.map(r => Vector.tabulate(n)(r.getLong))
+      .fold(Vector.fill(n)(0L))((a, b) => a.lazyZip(b).map(_ + _))
+  }
 
   /** Ensure the raw event frame carries a `seq` replay-order column:
     * Kafka batches use the per-partition `offset`; frames without
@@ -196,39 +216,46 @@ object Ingest {
     *  - remove of a missing key is naturally a no-op; an add for an
     *    existing key replaces the row (documented deviation: the
     *    reference's producer-side duplicate gate makes this unreachable
-    *    there).
+    *    there);
+    *  - a key with no effective event keeps its current row(s).
     *
-    * One window pass over the batch partitioned by key + one key-level
-    * join against `current` — no driver work, scales with executors.
+    * One replay over `current ∪ events`, partitioned by key: each
+    * current row enters as its key's leading existence event
+    * (`_src = 0`, ordered before every event), a first window carries
+    * the latest preceding existence state to each edit, and a second
+    * window over the same partitioning picks the winner. Both windows
+    * share one hash exchange on the key — no join, no driver work,
+    * scales with executors. A null key equals no key: current rows
+    * with a null key pass through unchanged, and null-key events
+    * replay among themselves without seeing them.
     */
   def applyEvents(current: DataFrame, events: DataFrame, key: String): DataFrame = {
-    val dataCols = current.columns
-    val wSeq = Window.partitionBy(col(key)).orderBy(col("seq"), col("kind"))
-    val curKeys = current.select(col(key)).distinct()
-      .withColumn("_in_current", lit(true))
-    val annotated = events
-      // 1 = key exists after this event, 0 = gone; null for edits
-      .withColumn("_exist_change",
-        when(col("kind") === "remove", lit(0))
-          .when(col("kind") =!= "edit", lit(1)))
+    val k = col(key)
+    val src = col("_src")
+    val byKey = Window.partitionBy(k)
+    val replayed = current
+      .withColumn("_src", lit(0))
+      .withColumn("_exist_change", when(k.isNotNull, lit(1)))
+      .unionByName(events
+        .withColumn("_src", lit(1))
+        // 1 = key exists after this event, 0 = gone; null for edits
+        .withColumn("_exist_change",
+          when(col("kind") === "remove", lit(0))
+            .when(col("kind") =!= "edit", lit(1))),
+        allowMissingColumns = true)
       .withColumn("_prev_exist",
-        last(col("_exist_change"), ignoreNulls = true)
-          .over(wSeq.rowsBetween(Window.unboundedPreceding, -1)))
-      .join(curKeys, Seq(key), "left")
-      .withColumn("_exists_before",
-        coalesce(col("_prev_exist") === 1, col("_in_current"), lit(false)))
-    val effective = annotated
-      .filter(col("kind") =!= "edit" || col("_exists_before"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(key))
-          .orderBy(col("seq").desc, col("kind").desc)))
-      .filter(col("_rn") === 1)
-    val upserts = effective.filter(col("kind") =!= "remove")
-      .select(dataCols.map(col).toIndexedSeq: _*)
-    val removes = effective.filter(col("kind") === "remove")
-      .select(col(key))
-    PosOps.upsert(current, upserts, key)
-      .join(removes, Seq(key), "left_anti")
+        last(col("_exist_change"), ignoreNulls = true).over(
+          byKey.orderBy(src, col("seq"), col("kind"))
+            .rowsBetween(Window.unboundedPreceding, -1)))
+      .filter(src === 0 || col("kind") =!= "edit" || col("_prev_exist") === 1)
+    val lastFirst = byKey.orderBy(src.desc, col("seq").desc, col("kind").desc)
+    replayed
+      .withColumn("_rn", row_number().over(lastFirst))
+      .withColumn("_win_src", first(src).over(lastFirst))
+      .filter(
+        (src === 0 && (k.isNull || col("_win_src") === 0)) ||
+          (src === 1 && col("_rn") === 1 && col("kind") =!= "remove"))
+      .select(current.columns.map(col).toIndexedSeq: _*)
   }
 
   /** S5 — the real Kafka source: ONE stream subscribed to all 9 topics
@@ -344,7 +371,7 @@ object Ingest {
     // that by |batch|; manifest-level future work.)
     val keyed = events
       .filter(col("kind").isin("edit", "remove") && col(key).isNotNull)
-      .select(col(key)).distinct()
+      .select(col(key))
     val fromCurrent =
       if (keyed.isEmpty) fromEvents.limit(0)
       else current.join(keyed, Seq(key), "left_semi")
@@ -353,13 +380,6 @@ object Ingest {
       .collect().map(_.getString(0)).toSeq
   }
 
-  /** Apply one entity's events partition-scoped: read ONLY the touched
-    * partitions, replay events against that slice, rewrite ONLY those
-    * partitions (untouched partitions are carried forward by reference
-    * — their files are never opened). Ingest I/O is O(|batch|), not
-    * O(|table|) (VERDICT r2 "What's wrong #2"); consolidation runs
-    * when the snapshot's read fan-out exceeds [[maxLiveVersions]].
-    */
   /** Snapshot-meta key for the monotonic sale-id counter — maintained
     * by [[applyMicroBatch]] so id assignment never re-scans the id
     * column (the reference's `sale_id_tracker.txt`, kafka_consumer.py:
@@ -385,6 +405,13 @@ object Ingest {
       }
     }
 
+  /** Apply one entity's events partition-scoped: read ONLY the touched
+    * partitions, replay events against that slice, rewrite ONLY those
+    * partitions (untouched partitions are carried forward by reference
+    * — their files are never opened). Ingest I/O is O(|batch|), not
+    * O(|table|) (VERDICT r2 "What's wrong #2"); consolidation runs
+    * when the snapshot's read fan-out exceeds [[maxLiveVersions]].
+    */
   private def applyPartitioned(
       spark: SparkSession, store: TableStore, table: String,
       storeSchema: StructType, events: DataFrame,
@@ -406,10 +433,15 @@ object Ingest {
     val batch = withSeq(rawBatch)
     batch.persist()
     try {
+      val Seq(nSales, nProducts, nCustomers) = entityCounts(batch, Seq(
+        saleTopics -> saleSchema,
+        productTopics -> productSchema,
+        customerTopics -> customerSchema))
+
       // --- sales: assign ids to inserts, then upsert/remove,
       //     partition-scoped by day ---
       val saleEvents = parseEntity(batch, saleTopics, saleSchema)
-      if (!saleEvents.isEmpty) {
+      if (nSales > 0) {
         migrateLegacy(spark, store, "sales", saleSchema, saleStoreSchema,
           _.withColumn(saleDayCol, substring(col("sale_date"), 1, 10)),
           saleDayCol)
@@ -439,7 +471,7 @@ object Ingest {
 
       // --- products: partition-scoped by category ---
       val prodEvents = parseEntity(batch, productTopics, productSchema)
-      if (!prodEvents.isEmpty) {
+      if (nProducts > 0) {
         migrateLegacy(spark, store, "products", productSchema, productSchema,
           identity, productPartCol)
         applyPartitioned(spark, store, "products", productSchema,
@@ -448,7 +480,7 @@ object Ingest {
 
       // --- customers: single unpartitioned dimension ---
       val custEvents = parseEntity(batch, customerTopics, customerSchema)
-      if (!custEvents.isEmpty) {
+      if (nCustomers > 0) {
         val current = store.read(spark, "customers", customerSchema)
         store.overwrite("customers", applyEvents(current, custEvents, "customer_id"))
       }

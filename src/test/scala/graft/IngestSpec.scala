@@ -50,6 +50,57 @@ class IngestSpec extends SparkTestBase {
     assert(got == Set(1 -> "a"))
   }
 
+  test("applyEvents null keys: current null-key rows pass through, " +
+    "null-key events replay among themselves") {
+    val current = Seq[(Option[Int], String)](
+      (None, "n1"), (None, "n2"), (Some(1), "a")).toDF("id", "val")
+    def run(evs: (String, Long, Option[Int], String)*) =
+      Ingest.applyEvents(current, evs.toDF("kind", "seq", "id", "val"), "id")
+        .as[(Option[Int], String)].collect().toSeq.sorted
+    val kept = Seq[(Option[Int], String)]((None, "n1"), (None, "n2"))
+    // a null key never matches a current row: an edit needs an earlier
+    // null-key add in the batch; the last effective event adds one row
+    assert(run(
+      ("edit", 1L, None, "e0"),
+      ("add", 2L, None, "x"),
+      ("edit", 3L, None, "x2"),
+      ("edit", 4L, Some(1), "a2")) ==
+      (kept ++ Seq(None -> "x2", Some(1) -> "a2")).sorted)
+    // an edit with no earlier null-key add is a no-op
+    assert(run(("edit", 1L, None, "e")) == (kept :+ (Some(1) -> "a")).sorted)
+    // a winning null-key remove drops no current row
+    assert(run(("add", 1L, None, "x"), ("remove", 2L, None, "")) ==
+      (kept :+ (Some(1) -> "a")).sorted)
+  }
+
+  test("applyEvents replays in one shuffle exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val current = spark.range(2000)
+        .select(col("id").cast("int").as("id"), concat(lit("c"), col("id")).as("val"))
+      val evs = spark.range(3000).select(
+        element_at(array(lit("add"), lit("edit"), lit("remove")),
+          (col("id") % 3 + 1).cast("int")).as("kind"),
+        col("id").as("seq"),
+        (col("id") % 2500).cast("int").as("id"),
+        concat(lit("v"), col("id")).as("val"))
+      val out = Ingest.applyEvents(current, evs, "id")
+      out.collect() // AQE finalizes the plan
+      val plan = out.queryExecution.executedPlan
+      val exchanges = Plans.collectWithSubqueries(plan) {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(exchanges.size == 1, s"one exchange on the key expected:\n$plan")
+    } finally saved match {
+      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("assignSaleIds: dense unique ids in key order across partitions") {
     val n = 1000
     val batch = spark.range(n)
@@ -357,6 +408,55 @@ class IngestSpec extends SparkTestBase {
     val p1 = store.read(spark, "products", Ingest.productSchema)
       .select("product_id", "product_name").as[(Int, String)].collect().toSet
     assert(p1 == Set(11 -> "Milk"), "edit on a missing product key must be a no-op")
+  }
+
+  test("applyMicroBatch job budget on a three-entity batch; an entity " +
+    "whose events are all corrupt is skipped") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs")
+    val store = new TableStore(s"$dir/store")
+    def product(id: Int, name: String, cat: String) =
+      s"""{"product_id":$id,"product_name":"$name","product_description":"d",""" +
+        s""""product_category":"$cat","product_price":2.0,"stock_level":5}"""
+    def customer(id: Int, name: String) =
+      s"""{"customer_id":$id,"customer_name":"$name","customer_location":"X"}"""
+    Ingest.applyMicroBatch(spark, Seq(
+      ("transactions_sale", sale("2025-01-01 10:00:00", 1, 11, 1, 2.0), 0L),
+      ("transactions_sale", sale("2025-01-02 10:00:00", 2, 12, 1, 3.0), 1L),
+      ("products_add", product(11, "Milk", "Daily"), 2L),
+      ("products_add", product(12, "Beef", "Meat"), 3L),
+      ("customers_add", customer(1, "Ann"), 4L))
+      .toDF("topic", "value", "seq"), store)
+    val batch = Seq(
+      ("transactions_sale", sale("2025-01-02 11:00:00", 3, 11, 2, 2.0), 0L),
+      ("transactions_edit",
+        """{"sale_id":1,"sale_date":"2025-01-01 10:00:00","customer_id":1,""" +
+          """"product_id":11,"quantity":5,"price":2.0,"total_price":10.0,""" +
+          """"payment_method":"Cash"}""", 1L),
+      ("transactions_remove", """{"sale_id":2}""", 2L),
+      ("products_edit", product(11, "Milk2", "Daily"), 3L),
+      ("products_add", product(13, "Cod", "Seafood"), 4L),
+      ("customers_edit", customer(1, "Ann2"), 5L),
+      ("customers_add", customer(2, "Bob"), 6L))
+      .toDF("topic", "value", "seq")
+    // one entity probe, then per entity a one-exchange replay: 20 jobs
+    // (adaptive query stages included) for this batch; a per-entity
+    // emptiness probe or a join-based replay shows up here
+    val sites = jobCallSites(Ingest.applyMicroBatch(spark, batch, store))
+    assert(sites.size <= 20, s"${sites.size} jobs:\n${sites.mkString("\n")}")
+    assert(store.read(spark, "sales", Ingest.saleSchema)
+      .select("sale_id", "quantity").as[(Long, Int)].collect().toSet ==
+      Set(1L -> 5, 3L -> 2))
+    assert(store.read(spark, "customers", Ingest.customerSchema)
+      .select("customer_id", "customer_name").as[(Int, String)].collect().toSet ==
+      Set(1 -> "Ann2", 2 -> "Bob"))
+
+    // customers only corrupt: the table is not rewritten
+    val custVersion = store.currentVersion("customers")
+    Ingest.applyMicroBatch(spark, Seq(
+      ("products_edit", product(12, "Beef2", "Meat"), 0L),
+      ("customers_add", "not json {{{", 1L))
+      .toDF("topic", "value", "seq"), store)
+    assert(store.currentVersion("customers") == custVersion)
   }
 
   private def sale(date: String, cust: Int, prod: Int, qty: Int, price: Double) =

@@ -54,6 +54,34 @@ class ReplayModelSpec extends SparkTestBase {
     }
   }
 
+  test("applyEvents equals the sequential model under seq ties and " +
+    "untouched current rows") {
+    val rnd = new Random(20261018L)
+    val kinds = Seq("add", "edit", "remove")
+    (1 to 30).foreach { round =>
+      val nKeys = 2 + rnd.nextInt(4)
+      // keys past nKeys + 2 receive no event: their rows must survive
+      val current = (1 to nKeys + 4).filter(_ => rnd.nextBoolean())
+        .map(k => k -> s"cur$k").toMap ++
+        ((nKeys + 3) to (nKeys + 4)).map(k => k -> s"idle$k")
+      // seq in 0..2: one key gets several events under one seq, told
+      // apart by kind; (seq, kind) stays distinct per key
+      val events = (1 to (1 + rnd.nextInt(16))).map { i =>
+        (kinds(rnd.nextInt(3)), rnd.nextInt(3).toLong,
+          1 + rnd.nextInt(nKeys + 2), s"v$round-$i")
+      }.distinctBy(e => (e._1, e._2, e._3))
+      val expected = modelReplay(current, events)
+      val got = Ingest.applyEvents(
+        current.toSeq.toDF("id", "val"),
+        events.toDF("kind", "seq", "id", "val"),
+        "id").as[(Int, String)].collect()
+      assert(got.length == got.map(_._1).distinct.length,
+        s"round $round emitted a key twice: ${got.toSeq}")
+      assert(got.toMap == expected,
+        s"round $round diverged\n events=$events\n current=$current")
+    }
+  }
+
   test("upsert invariants: key union, updates win, idempotent") {
     val rnd = new Random(7L)
     (1 to 10).foreach { _ =>
